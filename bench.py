@@ -141,7 +141,7 @@ def calibration(tmpdir: str) -> dict[str, float]:
     w = r = float("inf")
     for _ in range(3):
         t0 = time.time()
-        _codec.write_arrow_table(path, tbl)
+        _codec.write_arrow_table(path, tbl, level=6)  # the level the reference was pinned at
         w = min(w, time.time() - t0)
         t0 = time.time()
         _codec.read_arrow_table(path)
@@ -345,11 +345,12 @@ def bench_scbf(spark, tmpdir: str) -> dict[str, float]:
 
     pat = table_of(df)
     local = os.path.join(tmpdir, "codec.scbf")
+    # level 6: the reference writer's zlib level, so the comparison holds
     t0 = time.time()
-    _codec.write_arrow_table(local, pat)
+    _codec.write_arrow_table(local, pat, level=6)
     times["codec_write_200k"] = round(time.time() - t0, 4)
     t0 = time.time()
-    _codec.write_arrow_table(local, pat, workers=0)  # threaded per-block zlib
+    _codec.write_arrow_table(local, pat, level=6, workers=0)  # threaded per-block zlib
     times["codec_write_200k_mt"] = round(time.time() - t0, 4)
     t0 = time.time()
     _codec.read_arrow_table(local)

@@ -43,7 +43,10 @@ TYPE_UTF8 = 3
 TYPE_NAMES = {TYPE_INT32: "int32", TYPE_FLOAT64: "float64", TYPE_UTF8: "utf8"}
 TYPE_CODES = {v: k for k, v in TYPE_NAMES.items()}
 
-DEFAULT_ZLIB_LEVEL = 6
+# Fast deflate by default: level 6 spent 90-99% of a writer task's Python
+# time in zlib for ~6% fewer bytes. Every level decodes with the same reader;
+# the CLI pins level 6 explicitly for reference-parity output.
+DEFAULT_ZLIB_LEVEL = zlib.Z_BEST_SPEED
 
 # u32 prefix-sum offsets cap a single utf8 blob at 4 GiB (SPEC.md:80).
 MAX_UTF8_BLOB = (1 << 32) - 1
@@ -397,41 +400,46 @@ def read_arrow_table(path: str, columns: Optional[Sequence[str]] = None):
     per value; numeric columns come from zero-copy ``frombuffer`` views.
     This is the fast path used by the Spark DataSource.
     """
+    with open(path, "rb") as f:
+        return read_arrow_table_from(f, read_file_info(f), columns)
+
+
+def read_arrow_table_from(f: BinaryIO, info: ScbfFileInfo, columns: Optional[Sequence[str]] = None):
+    """``read_arrow_table`` on an open file whose header ``info`` was already
+    parsed, so a caller that inspected the header does not read it twice."""
     import pyarrow as pa
 
-    with open(path, "rb") as f:
-        info = read_file_info(f)
-        meta_map = info.column_map()
-        if columns is None:
-            selected = [m.name for m in info.columns]
+    meta_map = info.column_map()
+    if columns is None:
+        selected = [m.name for m in info.columns]
+    else:
+        selected = list(columns)
+    arrays = []
+    fields = []
+    for name in selected:
+        if name not in meta_map:
+            raise KeyError(f"Column {name} not found")
+        m = meta_map[name]
+        if m.type_code == TYPE_UTF8:
+            offsets, blob = decode_utf8_buffers(f, m)
+            arr = pa.StringArray.from_buffers(
+                m.count,
+                pa.py_buffer(offsets.astype("<i4").tobytes()),
+                pa.py_buffer(blob),
+            )
+            fields.append(pa.field(name, pa.string(), nullable=False))
         else:
-            selected = list(columns)
-        arrays = []
-        fields = []
-        for name in selected:
-            if name not in meta_map:
-                raise KeyError(f"Column {name} not found")
-            m = meta_map[name]
-            if m.type_code == TYPE_UTF8:
-                offsets, blob = decode_utf8_buffers(f, m)
-                arr = pa.StringArray.from_buffers(
-                    m.count,
-                    pa.py_buffer(offsets.astype("<i4").tobytes()),
-                    pa.py_buffer(blob),
+            np_arr = decode_numeric(f, m)
+            arr = pa.array(np_arr, type=pa.int32() if m.type_code == TYPE_INT32 else pa.float64())
+            fields.append(
+                pa.field(
+                    name,
+                    pa.int32() if m.type_code == TYPE_INT32 else pa.float64(),
+                    nullable=False,
                 )
-                fields.append(pa.field(name, pa.string(), nullable=False))
-            else:
-                np_arr = decode_numeric(f, m)
-                arr = pa.array(np_arr, type=pa.int32() if m.type_code == TYPE_INT32 else pa.float64())
-                fields.append(
-                    pa.field(
-                        name,
-                        pa.int32() if m.type_code == TYPE_INT32 else pa.float64(),
-                        nullable=False,
-                    )
-                )
-            arrays.append(arr)
-        return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
+            )
+        arrays.append(arr)
+    return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
 
 
 def _utf8_raw_from_arrow(col) -> Tuple[bytes, bytes]:

@@ -53,7 +53,7 @@ MAGIC_V2 = b"SCBFv2\x00\x00"
 V2_TYPES = ("int32", "int64", "float64", "bool", "utf8")
 _NP_DTYPES = {"int32": "<i4", "int64": "<i8", "float64": "<f8", "bool": "u1"}
 
-DEFAULT_ZLIB_LEVEL = 6
+DEFAULT_ZLIB_LEVEL = zlib.Z_BEST_SPEED  # same rationale as codec.DEFAULT_ZLIB_LEVEL
 DICT_RATIO = 0.5
 MAX_STAT_STR = 64
 #: distinct-value-set stats: a utf8 column whose block set has ≤ this many
@@ -441,15 +441,20 @@ def write_arrow_table(
 def read_meta(path: str) -> dict:
     """Footer metadata of a v2 file (EOF-ranged read, no data blocks touched)."""
     with open(path, "rb") as f:
-        f.seek(0)
         if f.read(8) != MAGIC_V2:
             raise ScbfV2Error("bad magic: not an SCBF v2 file")
-        f.seek(-16, 2)
-        meta_len, tail = struct.unpack("<Q8s", f.read(16))
-        if tail != MAGIC_V2:
-            raise ScbfV2Error("bad tail magic: truncated or corrupt SCBF v2 file")
-        f.seek(-16 - meta_len, 2)
-        return json.loads(zlib.decompress(f.read(meta_len)).decode("utf-8"))
+        return read_footer(f)
+
+
+def read_footer(f: BinaryIO) -> dict:
+    """Footer metadata of an open v2 file whose head magic the caller has
+    already checked."""
+    f.seek(-16, 2)
+    meta_len, tail = struct.unpack("<Q8s", f.read(16))
+    if tail != MAGIC_V2:
+        raise ScbfV2Error("bad tail magic: truncated or corrupt SCBF v2 file")
+    f.seek(-16 - meta_len, 2)
+    return json.loads(zlib.decompress(f.read(meta_len)).decode("utf-8"))
 
 
 def _get_block(f: BinaryIO, ref: BlockRef, verify: bool = True, codec: str = "zlib") -> bytes:
@@ -488,34 +493,50 @@ def read_arrow_table(
     the SPLIT primitive: the DataSource plans one input partition per group
     so executors scan a single large compacted file in parallel (Parquet's
     row-group split model). Composes with ``filters`` (intersection)."""
+    with open(path, "rb") as f:
+        if f.read(8) != MAGIC_V2:
+            raise ScbfV2Error("bad magic: not an SCBF v2 file")
+        return read_arrow_table_from(
+            f, read_footer(f), columns, verify_crc, filters, group_indices
+        )
+
+
+def read_arrow_table_from(
+    f: BinaryIO,
+    meta: dict,
+    columns: Optional[Sequence[str]] = None,
+    verify_crc: bool = True,
+    filters: Optional[Sequence[Any]] = None,
+    group_indices: Optional[Sequence[int]] = None,
+):
+    """``read_arrow_table`` on an open file whose footer ``meta`` was already
+    read, so a caller that inspected the footer does not read it twice."""
     import pyarrow as pa
 
-    meta = read_meta(path)
     codec = meta.get("codec", "zlib")  # absent in pre-codec files
     if codec not in BLOCK_CODECS:
         raise ScbfV2Error(f"file uses unknown codec {codec!r}; have {sorted(BLOCK_CODECS)}")
     selected = list(columns) if columns is not None else [c["name"] for c in meta["columns"]]
 
     groups = meta.get("row_groups")
-    with open(path, "rb") as f:
-        if groups is None:
-            if group_indices is not None and list(group_indices) != [0]:
-                raise ScbfV2Error(
-                    f"group_indices {list(group_indices)!r} on an ungrouped file "
-                    "(only [0] is valid)"
-                )
-            return _read_group(f, codec, meta["columns"], meta["rows"], selected, verify_crc)
-        # per-group nullability can differ (one group has nulls, another
-        # doesn't); concat needs one schema, so force the file-level flags
-        nullable = {c["name"]: bool(c["nullable"]) for c in meta["columns"]}
-        want = range(len(groups)) if group_indices is None else group_indices
-        tables = [
-            _read_group(
-                f, codec, groups[i]["columns"], groups[i]["rows"], selected, verify_crc, nullable
+    if groups is None:
+        if group_indices is not None and list(group_indices) != [0]:
+            raise ScbfV2Error(
+                f"group_indices {list(group_indices)!r} on an ungrouped file "
+                "(only [0] is valid)"
             )
-            for i in want
-            if not filters or _stats_may_match(groups[i]["columns"], groups[i]["rows"], filters)
-        ]
+        return _read_group(f, codec, meta["columns"], meta["rows"], selected, verify_crc)
+    # per-group nullability can differ (one group has nulls, another
+    # doesn't); concat needs one schema, so force the file-level flags
+    nullable = {c["name"]: bool(c["nullable"]) for c in meta["columns"]}
+    want = range(len(groups)) if group_indices is None else group_indices
+    tables = [
+        _read_group(
+            f, codec, groups[i]["columns"], groups[i]["rows"], selected, verify_crc, nullable
+        )
+        for i in want
+        if not filters or _stats_may_match(groups[i]["columns"], groups[i]["rows"], filters)
+    ]
     if not tables:
         by_name = {c["name"]: c for c in meta["columns"]}
         empty_fields = [

@@ -10,11 +10,18 @@ Registers format ``"scbf"`` so the full DataFrame API works against SCBF data:
 Design (Spark-first, NOT a translation of the reference's single-file engine):
 
 - **Dataset = directory of SCBF files** (or one file for reference compat).
-  A 100 TB dataset is many files; each file is one input partition, so a
-  1000-executor cluster reads them fully in parallel. The reference's
-  single-file, absolute-offset layout (reference SPEC.md:18-26) cannot be
-  appended to concurrently, so parallel writes emit one ``part-*.scbf`` per
-  Spark partition — the same files-per-partition strategy Parquet uses.
+  The reference's single-file, absolute-offset layout (reference
+  SPEC.md:18-26) cannot be appended to concurrently, so parallel writes emit
+  one ``part-*.scbf`` per Spark partition — the same files-per-partition
+  strategy Parquet uses.
+- **Input partitions = packed files** — Spark's own ``FilePartition`` rule:
+  whole files are packed, in listing order, into partitions of at most
+  ``min(128 MiB, max(4 MiB, Σ(size + 4 MiB) / slots))`` bytes, each file
+  costing 4 MiB extra to open, where ``slots`` is the session's default
+  parallelism. Many small files thus scan as about one task per core
+  instead of one Python task per file, while a 100 TB dataset still spreads
+  over every executor. Big row-grouped v2 files split into one partition
+  per row group instead (``split_bytes``).
 - **Projection pushdown to the storage layer** — the format's raison d'être
   (reference reader.py:111-133): ``read()`` decompresses only the columns in
   the schema Spark hands to ``DataSource.reader(schema)``. Whether Catalyst
@@ -80,6 +87,17 @@ def _file_version(path: str) -> int:
         return 2
     if magic == codec.MAGIC:
         return 1
+    raise codec.ScbfError(f"{path}: not an SCBF file")
+
+
+def _read_header(f, path: str):
+    """(version, header) of an open SCBF file — the v2 footer dict or the v1
+    ``ScbfFileInfo``: one magic read and one header/footer parse."""
+    magic = f.read(8)
+    if magic == codec_v2.MAGIC_V2:
+        return 2, codec_v2.read_footer(f)
+    if magic == codec.MAGIC:
+        return 1, codec.read_file_info(f)
     raise codec.ScbfError(f"{path}: not an SCBF file")
 
 
@@ -261,47 +279,85 @@ def _partition_may_match(values: dict, filters) -> bool:
 
 
 def _schema_of_file(path: str) -> StructType:
-    if _file_version(path) == 2:
+    with open(path, "rb") as f:
+        version, header = _read_header(f, path)
+    if version == 2:
         # Dataset-level nullability must be True even when the sampled file
         # happens to contain no nulls: a sibling partition file may carry
         # nulls in the same column, and a nullable=False schema would make
         # Spark's Arrow accessors crash on them. This mirrors Spark's own
         # Parquet behavior (dataset schemas are always nullable).
-        meta = codec_v2.read_meta(path)
         return StructType(
             [
                 StructField(c["name"], SPARK_TYPE_FOR_V2[c["type"]], nullable=True)
-                for c in meta["columns"]
+                for c in header["columns"]
             ]
         )
-    with open(path, "rb") as f:
-        info = codec.read_file_info(f)
     return StructType(
         [
             StructField(m.name, SPARK_TYPE_FOR_CODE[m.type_code], nullable=False)
-            for m in info.columns
+            for m in header.columns
         ]
     )
 
 
-class ScbfFilePartition(InputPartition):
-    def __init__(
-        self,
-        file_path: str,
-        part_values: dict | None = None,
-        groups: list | None = None,
-        n_rows: int | None = None,
-    ):
-        self.file_path = file_path
-        self.part_values = part_values or {}
-        # groups: row-group indices this split covers (None = whole file);
-        # n_rows: their row count, so column-less projections need no re-read
-        self.groups = groups
-        self.n_rows = n_rows
+@dataclass
+class ScbfFile:
+    """One file, or a row-group split of one, inside an input partition."""
+
+    path: str
+    part_values: dict
+    # groups: row-group indices this split covers (None = whole file);
+    # n_rows: their row count, so column-less projections need no re-read
+    groups: Optional[list] = None
+    n_rows: Optional[int] = None
+
+
+class ScbfPartition(InputPartition):
+    """The files one read task decodes, in order. No files = the empty
+    partition a fully pruned scan still needs to carry its schema."""
+
+    def __init__(self, files: List[ScbfFile]):
+        self.files = files
+
+
+#: Spark's ``spark.sql.files.openCostInBytes`` and ``maxPartitionBytes``
+#: defaults, which the packing rule below reuses.
+OPEN_COST_BYTES = 4 << 20
+MAX_PARTITION_BYTES = 128 << 20
+
+
+def _pack(units: Sequence[tuple], slots: int) -> List[ScbfPartition]:
+    """Spark's ``FilePartition`` rule over ``(ScbfFile, size)`` units in
+    listing order: a partition closes when its running size (each file's
+    bytes plus ``OPEN_COST_BYTES``) plus the next file's bytes would exceed
+    ``min(MAX_PARTITION_BYTES, max(OPEN_COST_BYTES, Σ(size + open cost) /
+    slots))``. A unit with size ``None`` (a row-group split) stands alone.
+    Concatenating the partitions gives back the listing order, so packing
+    never reorders a scan's rows."""
+    total = sum(size + OPEN_COST_BYTES for _f, size in units if size is not None)
+    max_split = min(MAX_PARTITION_BYTES, max(OPEN_COST_BYTES, total // max(1, slots)))
+    parts: List[ScbfPartition] = []
+    cur: List[ScbfFile] = []
+    cur_size = 0
+    for f, size in units:
+        if cur and (size is None or cur_size + size > max_split):
+            parts.append(ScbfPartition(cur))
+            cur, cur_size = [], 0
+        if size is None:
+            parts.append(ScbfPartition([f]))
+        else:
+            cur.append(f)
+            cur_size += size + OPEN_COST_BYTES
+    if cur:
+        parts.append(ScbfPartition(cur))
+    return parts
 
 
 class ScbfReader(DataSourceReader):
-    """One input partition per SCBF file; pruned Arrow-batch reads.
+    """Whole SCBF files packed into about one input partition per core
+    (``_pack``), big row-grouped files split per group; pruned Arrow-batch
+    reads.
 
     v2 files additionally support **filter-pushdown file skipping**:
     ``pushFilters`` records Spark's pushed predicates, and ``partitions()``
@@ -310,11 +366,12 @@ class ScbfReader(DataSourceReader):
     returned to Spark (we skip whole files, Spark still filters rows), so
     semantics never depend on the stats."""
 
-    def __init__(self, schema: StructType, options):
+    def __init__(self, schema: StructType, options, slots: int):
         self.schema = schema
         self.path = options.get("path")
         if self.path is None:
             raise ValueError("scbf read requires a path: .load('/path/to/data')")
+        self.slots = slots
         # ``read()`` must yield exactly the schema negotiated by
         # ``DataSource.schema()`` (Spark enforces arity) — the ``columns``
         # projection option is therefore applied in ``schema()``, and here we
@@ -323,8 +380,8 @@ class ScbfReader(DataSourceReader):
         self.verify_crc = options.get("verify_crc", "true").lower() != "false"
         self.file_skipping = options.get("file_skipping", "true").lower() != "false"
         # files at least this big are split into one input partition per row
-        # group (when grouped); below it, one partition per file and no
-        # planning-time footer read on unfiltered scans
+        # group (when grouped); below it, files are packed and unfiltered
+        # scans read no footer at planning time
         self.split_bytes = int(options.get("split_bytes", str(32 * 1024 * 1024)))
         self.snapshot = options.get("snapshot")
         self.files_opt = options.get("files")
@@ -353,14 +410,18 @@ class ScbfReader(DataSourceReader):
             for p in files
             if not (filters and specs[p] and not _partition_may_match(specs[p], filters))
         ]
+        sizes = {p: os.path.getsize(p) for p in candidates}
+
         # Footer reads (one ranged read per v2 file needing stats pruning or
         # split planning) are I/O-bound and independent — fetch them with a
         # thread pool, the way Parquet parallelizes driver-side footer reads.
         # Serial, a filtered plan over 100k files is tens of seconds of
         # planning; threaded it's bounded by storage round-trips / 16.
         def _meta_of(p: str):
-            if (filters or os.path.getsize(p) >= self.split_bytes) and _file_version(p) == 2:
-                return codec_v2.read_meta(p)
+            if filters or sizes[p] >= self.split_bytes:
+                with open(p, "rb") as f:
+                    if f.read(8) == codec_v2.MAGIC_V2:
+                        return codec_v2.read_footer(f)
             return None
 
         if len(candidates) > 1:
@@ -371,7 +432,7 @@ class ScbfReader(DataSourceReader):
         else:
             metas = [_meta_of(p) for p in candidates]
 
-        parts = []
+        units = []
         for p, meta in zip(candidates, metas):
             spec = specs[p]
             if filters and meta is not None and not codec_v2.file_may_match(meta, filters):
@@ -382,29 +443,26 @@ class ScbfReader(DataSourceReader):
             # file size so planning a many-small-files dataset stays one
             # stat() per file with no footer reads.
             groups = None if meta is None else meta.get("row_groups")
-            if groups and len(groups) > 1 and os.path.getsize(p) >= self.split_bytes:
+            if groups and len(groups) > 1 and sizes[p] >= self.split_bytes:
                 for i, g in enumerate(groups):
                     if filters and not codec_v2._stats_may_match(
                         g["columns"], g["rows"], filters
                     ):
                         continue
-                    parts.append(ScbfFilePartition(p, spec, groups=[i], n_rows=g["rows"]))
+                    units.append((ScbfFile(p, spec, groups=[i], n_rows=g["rows"]), None))
             else:
-                parts.append(ScbfFilePartition(p, spec))
+                units.append((ScbfFile(p, spec), sizes[p]))
         # An all-files-skipped scan still needs one (empty) partition so the
         # negotiated schema flows through.
-        return parts or [ScbfFilePartition("")]
+        return _pack(units, self.slots) or [ScbfPartition([])]
 
-    def read(self, partition: ScbfFilePartition):
+    def read(self, partition: ScbfPartition):
         # Same filters that pruned whole files also prune row GROUPS inside
         # each surviving v2 file (codec_v2.read_arrow_table skips groups
         # whose stats/blooms prove no match — Parquet row-group pruning).
-        yield from _read_file_partition(
-            partition,
-            self.schema,
-            self.verify_crc,
-            self._filters if self.file_skipping else (),
-        )
+        filters = self._filters if self.file_skipping else ()
+        for f in partition.files:
+            yield from _read_file(f, self.schema, self.verify_crc, filters)
 
 
 def _merged_schema(files: Sequence[str]) -> StructType:
@@ -423,16 +481,6 @@ def _merged_schema(files: Sequence[str]) -> StructType:
                     f"{prev.dataType} vs {f.dataType} in {p}"
                 )
     return StructType(list(fields.values()))
-
-
-def _file_column_info(path: str) -> tuple[set, int]:
-    """(column names, row count) from a file's footer/header — no data I/O."""
-    if _file_version(path) == 2:
-        meta = codec_v2.read_meta(path)
-        return {c["name"] for c in meta["columns"]}, meta["rows"]
-    with open(path, "rb") as f:
-        info = codec.read_file_info(f)
-    return {m.name for m in info.columns}, info.total_rows
 
 
 def _pa_type_for_spark(dt):
@@ -458,59 +506,53 @@ def _pa_type_for_spark(dt):
     raise ValueError(f"no arrow type for spark type {dt}")
 
 
-def _read_file_partition(
-    partition: ScbfFilePartition, schema: StructType, verify_crc: bool, filters=()
-):
-    """Decode one SCBF file partition to Arrow batches, attaching directory-
-    encoded partition columns as constants and back-filling typed nulls for
-    columns the file predates (schema evolution under merge_schemas). Shared
-    by the batch and streaming readers."""
+def _read_file(entry: ScbfFile, schema: StructType, verify_crc: bool, filters=()):
+    """Decode one SCBF file (or row-group split) to Arrow batches, attaching
+    directory-encoded partition columns as constants and back-filling typed
+    nulls for columns the file predates (schema evolution under
+    merge_schemas). One open and one header/footer parse per file. Shared by
+    the batch and streaming readers."""
     import pyarrow as pa
 
-    if not partition.file_path:
-        return
-    columns = [f.name for f in schema.fields]
-    spark_types = {f.name: f.dataType for f in schema.fields}
-    part_values = partition.part_values
-    file_cols = [c for c in columns if c not in part_values]
-    avail, n = _file_column_info(partition.file_path)
-    present = [c for c in file_cols if c in avail]
-    missing = [c for c in file_cols if c not in avail]
-    is_v2 = _file_version(partition.file_path) == 2
-    if present:
-        if is_v2:
-            table = codec_v2.read_arrow_table(
-                partition.file_path, present, verify_crc=verify_crc,
-                filters=list(filters) or None,
-                group_indices=partition.groups,
-            )
+    # One Arrow schema for every file of a packed partition: the batches of
+    # one task share a stream, and files disagree on nullability flags.
+    target = pa.schema([pa.field(f.name, _pa_type_for_spark(f.dataType)) for f in schema.fields])
+    part_values = entry.part_values
+    file_cols = [c for c in target.names if c not in part_values]
+    with open(entry.path, "rb") as f:
+        version, header = _read_header(f, entry.path)
+        if version == 2:
+            avail, n = {c["name"] for c in header["columns"]}, header["rows"]
         else:
-            table = codec.read_arrow_table(partition.file_path, present)
-        n = table.num_rows
-    else:
-        # No data blocks needed (partition-only / all-evolved projection):
-        # just the row count — the split's own count for a row-group
-        # partition, the footer total (already in hand) otherwise.
-        table = None
-        if partition.groups is not None:
-            n = partition.n_rows
-    if part_values or missing:
-        # Assemble in negotiated column order: file data, constant partition
-        # values, and typed nulls for evolved columns this file predates.
-        arrays = []
-        for c in columns:
-            if c in part_values:
-                v = part_values[c]
-                typ = pa.int64() if isinstance(v, int) else pa.string()
-                # constant column without an n-element Python list round-trip
-                arrays.append(pa.repeat(pa.scalar(v, type=typ), n))
-            elif c in missing:
-                arrays.append(pa.nulls(n, _pa_type_for_spark(spark_types[c])))
+            avail, n = {m.name for m in header.columns}, header.total_rows
+        present = [c for c in file_cols if c in avail]
+        if present:
+            if version == 2:
+                table = codec_v2.read_arrow_table_from(
+                    f, header, present, verify_crc=verify_crc,
+                    filters=list(filters) or None,
+                    group_indices=entry.groups,
+                )
             else:
-                arrays.append(table.column(c))
-        table = pa.table(dict(zip(columns, arrays)))
-    for batch in table.to_batches(max_chunksize=1 << 16):
-        yield batch
+                table = codec.read_arrow_table_from(f, header, present)
+            n = table.num_rows
+        elif entry.groups is not None:
+            # No data blocks needed (partition-only / all-evolved projection):
+            # just the row count — the split's own count for a row-group
+            # partition, the footer total (already in hand) otherwise.
+            n = entry.n_rows
+    # Assemble in negotiated column order: file data, constant partition
+    # values, and typed nulls for evolved columns this file predates.
+    arrays = []
+    for field in target:
+        if field.name in part_values:
+            # constant column without an n-element Python list round-trip
+            arrays.append(pa.repeat(pa.scalar(part_values[field.name], type=field.type), n))
+        elif field.name in present:
+            arrays.append(table.column(field.name))
+        else:
+            arrays.append(pa.nulls(n, field.type))
+    yield from pa.Table.from_arrays(arrays, schema=target).to_batches(max_chunksize=1 << 16)
 
 
 @dataclass
@@ -728,11 +770,12 @@ class ScbfStreamReader(DataSourceStreamReader):
                 "(streaming reads require append-only, monotonically-named files)"
             )
         _f, _keys, _types, specs = _dataset_layout(self.path) if files else ([], [], {}, {})
-        parts = [ScbfFilePartition(p, specs.get(p)) for p in files[lo:hi]]
-        return parts or [ScbfFilePartition("")]
+        parts = [ScbfPartition([ScbfFile(p, specs.get(p, {}))]) for p in files[lo:hi]]
+        return parts or [ScbfPartition([])]
 
-    def read(self, partition: ScbfFilePartition):
-        yield from _read_file_partition(partition, self.schema, self.verify_crc)
+    def read(self, partition: ScbfPartition):
+        for f in partition.files:
+            yield from _read_file(f, self.schema, self.verify_crc)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are positional; nothing to clean up
@@ -803,7 +846,13 @@ class ScbfDataSource(DataSource):
     Read options: ``columns`` (comma-separated explicit projection),
     ``verify_crc`` (v2, default true), ``snapshot`` (id or tag — time-travel
     read pinned to a manifest from ``operators/snapshot.py``).
-    Write options: ``compression_level`` (zlib 0-9, default 6), ``version``
+    Reads pack whole files into about ``slots`` input partitions; ``slots``
+    is the session's default parallelism, which ``register`` stores on the
+    class it registers (this base class falls back to the planner host's
+    CPU count).
+    Write options: ``compression_level`` (zlib 0-9, default 1 =
+    ``zlib.Z_BEST_SPEED``: ~6% more bytes than level 6 at a quarter of the
+    compression time), ``version``
     (1 or 2), ``partition_by`` (comma-separated columns → hive ``k=v``
     directory layout; readers reconstruct the columns from the path and
     prune whole directories on pushed filters without touching a file),
@@ -815,6 +864,8 @@ class ScbfDataSource(DataSource):
     ``max_records_per_file`` (split each task's output into bounded-size
     files — the parquet-writer knob; 0/unset = one file per partition).
     """
+
+    slots: Optional[int] = None
 
     @classmethod
     def name(cls) -> str:
@@ -859,7 +910,7 @@ class ScbfDataSource(DataSource):
         return StructType([by_name[c.strip()] for c in cols_opt.split(",")])
 
     def reader(self, schema: StructType) -> ScbfReader:
-        return ScbfReader(schema, self.options)
+        return ScbfReader(schema, self.options, self.slots or os.cpu_count() or 1)
 
     def writer(self, schema: StructType, overwrite: bool) -> ScbfWriter:
         return ScbfWriter(schema, self.options, overwrite)
@@ -881,4 +932,14 @@ def register(spark) -> None:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass  # static conf in some deployments; reader then sees no filters
-    spark.dataSource.register(ScbfDataSource)
+    # The planner's Python worker has no SparkContext and no session conf
+    # reaches a data source's options, so the session's parallelism travels
+    # on the class itself: cloudpickle ships this dynamically created
+    # subclass by value, attribute included.
+    spark.dataSource.register(
+        type(
+            "ScbfDataSource",
+            (ScbfDataSource,),
+            {"slots": spark.sparkContext.defaultParallelism},
+        )
+    )

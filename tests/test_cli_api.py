@@ -213,3 +213,29 @@ def test_cli_ivf_maintenance_surface(spark, sf_small, tmp_path, capsys):
     assert got.count() == 5
     survivors = {r["vec_id"] for r in spark.read.parquet(S._resolve_store(store)).collect()}
     assert all(v % 2 != 0 for v in survivors)
+
+
+def test_csv_to_custom_default_is_level_6(spark, tmp_path):
+    """The CLI pins zlib level 6 (reference-parity bytes) although the codec
+    and DataSource default to fast deflate: every block of a flagless
+    conversion, on Spark and --local, is exactly level-6 zlib output."""
+    import zlib
+
+    from custom_columnar_format_spark.scbf import codec
+
+    p = tmp_path / "rep.csv"
+    p.write_text("id,name\n" + "".join(f"{i},item_{i % 13}\n" for i in range(3000)))
+    for extra in ([], ["--local"]):
+        scbf = str(tmp_path / f"out{len(extra)}.scbf")
+        assert cli_main(["csv_to_custom", str(p), scbf, *extra]) == 0
+        with open(scbf, "rb") as f:
+            info = codec.read_file_info(f)
+            blocks = []
+            for m in info.columns:
+                for off, size in ((m.block_offset, m.comp_size), (m.str_offset, m.str_comp_size)):
+                    if size:
+                        f.seek(off)
+                        blocks.append(f.read(size))
+        raws = [zlib.decompress(b) for b in blocks]
+        assert [zlib.compress(r, 6) for r in raws] == blocks
+        assert [zlib.compress(r, 1) for r in raws] != blocks  # the data tells levels apart

@@ -247,3 +247,19 @@ def test_cc_local_vs_distributed(spark):
         ).collect()
     }
     assert inc_local == inc_dist == {(1, 1), (2, 1), (500, 1), (600, 600), (601, 600)}
+
+
+def test_cc_drops_edges_with_null_endpoints(spark):
+    """An edge with a NULL endpoint joins nothing, on both sides of the
+    local_max_edges gate (the driver-side union-find used to raise TypeError
+    comparing None with an int)."""
+    df = spark.createDataFrame(
+        [(1, None), (None, 1), (2, 3), (3, 4)], "id_a: long, id_b: long"
+    )
+    want = {(2, 2), (3, 2), (4, 2)}
+    for cap in (100_000, 0):
+        got = {
+            (r.node, r.component)
+            for r in clustering.connected_components(df, local_max_edges=cap).collect()
+        }
+        assert got == want

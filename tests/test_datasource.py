@@ -238,3 +238,127 @@ def test_pinned_files_option_validation(spark, tmp_path):
         _list_scbf_files(out, files="../outside.scbf")
     with pytest.raises(Exception, match="only one"):
         _list_scbf_files(out, snapshot="1", files=rel)
+
+
+# --- input-partition packing --------------------------------------------------
+
+
+def _tiny_v1_files(root, tables):
+    """One v1 file per table under ``root`` (``k=v`` subdirs allowed in the
+    key), named so that listing order is the order given."""
+    import pyarrow as pa
+
+    paths = []
+    for i, (sub, t) in enumerate(tables):
+        d = os.path.join(root, sub)
+        os.makedirs(d, exist_ok=True)
+        paths.append(os.path.join(d, f"part-{i:04d}.scbf"))
+        codec.write_arrow_table(paths[-1], pa.table(t))
+    return paths
+
+
+def _ids(lo, n):
+    import pyarrow as pa
+
+    return {
+        "id": pa.array(range(lo, lo + n), pa.int32()),
+        "name": pa.array([f"n{i}" for i in range(lo, lo + n)]),
+    }
+
+
+def test_pack_rule_matches_spark_file_partition():
+    """Spark's FilePartition rule, in listing order: 8 x 1.6 MB files on 4
+    slots make 4 partitions of 2; a file bigger than the split size stands
+    alone; a row-group split (size None) closes the running partition."""
+    from custom_columnar_format_spark.sources.scbf_datasource import ScbfFile, _pack
+
+    files = [ScbfFile(f"f{i}", {}) for i in range(8)]
+    parts = _pack([(f, 1_600_000) for f in files], slots=4)
+    assert [[f.path for f in p.files] for p in parts] == [
+        ["f0", "f1"], ["f2", "f3"], ["f4", "f5"], ["f6", "f7"]
+    ]
+    assert len(_pack([(files[0], 1_600_000)], slots=4)) == 1
+    big = _pack([(files[0], 1 << 30), (files[1], 10), (files[2], 10)], slots=1)
+    assert [[f.path for f in p.files] for p in big] == [["f0"], ["f1", "f2"]]
+    split = _pack([(files[0], 10), (files[1], None), (files[2], 10)], slots=1)
+    assert [[f.path for f in p.files] for p in split] == [["f0"], ["f1"], ["f2"]]
+    assert _pack([], slots=4) == []
+
+
+def test_tiny_files_pack_into_one_partition_per_slot(spark, tmp_path):
+    """3P - 2 tiny files pack three to a partition: exactly P partitions
+    (P = defaultParallelism), rows in the same order as the files decoded
+    one after another in sorted order."""
+    import pyarrow as pa
+
+    p = spark.sparkContext.defaultParallelism
+    n_files = 3 * p - 2
+    root = str(tmp_path / "tiny")
+    paths = _tiny_v1_files(root, [("", _ids(100 * i, 5 + i)) for i in range(n_files)])
+    df = spark.read.format("scbf").load(root)
+    assert df.rdd.getNumPartitions() == p
+    want = pa.concat_tables([codec.read_arrow_table(f) for f in sorted(paths)])
+    assert [tuple(r) for r in df.collect()] == list(
+        zip(want.column("id").to_pylist(), want.column("name").to_pylist())
+    )
+
+
+def test_packed_partition_keeps_each_files_partition_values(spark, tmp_path):
+    root = str(tmp_path / "hive")
+    n = spark.sparkContext.defaultParallelism + 1
+    tables = [(f"k={'a' if i < n else 'b'}", _ids(100 * i, 3)) for i in range(2 * n)]
+    _tiny_v1_files(root, tables)
+    df = spark.read.format("scbf").load(root)
+    assert df.rdd.getNumPartitions() < 2 * n
+    rows = df.select("id", "k", F.spark_partition_id().alias("pid")).collect()
+    assert {(r.id, r.k) for r in rows} == {
+        (100 * i + j, "a" if i < n else "b") for i in range(2 * n) for j in range(3)
+    }
+    keys_per_pid = {}
+    for r in rows:
+        keys_per_pid.setdefault(r.pid, set()).add(r.k)
+    assert {"a", "b"} in keys_per_pid.values()  # one task read both dirs
+
+
+def test_packed_partition_backfills_older_file_under_merge_schemas(spark, tmp_path):
+    import pyarrow as pa
+
+    p = spark.sparkContext.defaultParallelism
+    root = str(tmp_path / "evolved")
+    old = {"id": pa.array([0, 1], pa.int32())}
+    new = [("", _ids(100 * i, 2)) for i in range(1, 3 * p - 2)]
+    _tiny_v1_files(root, [("", old)] + new)
+    df = spark.read.format("scbf").option("merge_schemas", "true").load(root)
+    rows = df.select("id", "name", F.spark_partition_id().alias("pid")).collect()
+    by_id = {r.id: r for r in rows}
+    assert by_id[0].name is None and by_id[1].name is None
+    assert by_id[100].name == "n100"
+    assert by_id[0].pid == by_id[100].pid  # the old file was packed with a newer one
+
+
+def test_scan_that_skips_every_file_keeps_one_empty_partition(spark, tmp_path):
+    out = str(tmp_path / "skip_all")
+    _sample_df(spark, 200).repartition(4).write.format("scbf").option("version", "2").mode(
+        "overwrite"
+    ).save(out)
+    df = spark.read.format("scbf").load(out).filter(F.col("id") > 10_000)
+    assert df.rdd.getNumPartitions() == 1
+    assert df.columns == ["id", "score", "name"]
+    assert df.collect() == []
+
+
+def test_default_write_is_fast_deflate(spark, tmp_path):
+    """The default compression level is zlib.Z_BEST_SPEED; level 6 stays one
+    option away and writes fewer bytes of repetitive data. Both read back the
+    same rows."""
+    df = spark.range(20_000).select(
+        F.col("id").cast("int").alias("id"),
+        F.concat(F.lit("category_"), (F.col("id") % 17).cast("string")).alias("name"),
+    ).coalesce(1)
+    fast, best = str(tmp_path / "fast"), str(tmp_path / "level6")
+    df.write.format("scbf").mode("overwrite").save(fast)
+    df.write.format("scbf").option("compression_level", "6").mode("overwrite").save(best)
+    size = lambda d: sum(os.path.getsize(f) for f in glob.glob(os.path.join(d, "*.scbf")))
+    assert size(best) < size(fast)
+    read = lambda d: sorted(tuple(r) for r in spark.read.format("scbf").load(d).collect())
+    assert read(fast) == read(best)
